@@ -43,21 +43,59 @@ def canonical_text(text: Column) -> Column:
     )
 
 
-def word_shingles(toks: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles of a token array.
+def token_windows(toks: Column, width: int, stride: int = 1) -> Column:
+    """Space-joined ``width``-token windows of a token array, in
+    position order. Window j covers tokens [j·stride, j·stride + width)
+    and there are ceil((size − width) / stride) + 1 of them: with
+    ``stride=1`` every full sliding window (none when the array is
+    shorter than ``width``), with ``stride=width`` the consecutive
+    chunks, the last of which may be short. A null array gives an
+    empty one.
 
-    ``transform(sequence(...))`` keeps shingling JVM-side; documents
-    shorter than ``n`` tokens yield an empty array.
+    Linear in the array length: ``toks`` is bound once per row to a
+    lambda variable (``transform(array(toks), tk -> …)[0]``, Catalyst's
+    only let-binding). A per-position lambda that named ``toks``
+    itself would make Catalyst re-evaluate the whole token expression
+    (split, filter and any text cleaning feeding it) at every
+    position, quadratic in the length. The windows are built column-
+    wise instead — column k holds token k of every window, and one
+    ``arrays_zip`` lines them up — because a nested lambda must not
+    capture ``tk`` either: Catalyst's canonical form of such a lambda
+    leaks the captured variable as a reference, and a Python UDF
+    applied to the result then silently stays unextracted.
     """
-    joined = F.transform(
-        F.sequence(F.lit(0), F.size(toks) - n),
-        lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
-    )
-    # guard: sequence(0, negative) would generate a DESCENDING sequence
-    # for docs shorter than n tokens — such docs have no shingles
-    return F.when(F.size(toks) >= n, F.array_distinct(joined)).otherwise(
-        F.array().cast("array<string>")
-    )
+
+    def windows(tk: Column) -> Column:
+        n_win = F.ceil((F.size(tk) - width) / stride) + 1
+
+        def column(k: int) -> Column:
+            shifted = F.slice(tk, k + 1, F.size(tk))
+            if stride == 1:
+                return shifted
+            return F.filter(shifted, lambda _, i: i % stride == 0)
+
+        # arrays_zip names its fields "0", "1", … and pads short
+        # columns with nulls (a short last window), which concat_ws skips
+        zipped = F.slice(F.arrays_zip(*map(column, range(width))), 1, n_win.cast("int"))
+        joined = F.transform(
+            zipped, lambda w: F.concat_ws(" ", *(w[str(k)] for k in range(width)))
+        )
+        # guard: slice's length must not be negative
+        return F.when(n_win > 0, joined).otherwise(F.array().cast("array<string>"))
+
+    return F.transform(F.array(toks), windows)[0]
+
+
+def word_shingles(toks: Column, n: int = 3) -> Column:
+    """Distinct word n-gram shingles of a token array, in
+    first-occurrence order; documents shorter than ``n`` tokens (and
+    null arrays) yield an empty array.
+
+    Built on :func:`token_windows`, so the token expression is
+    evaluated once per row and shingling costs time linear in the
+    document length, all JVM-side.
+    """
+    return F.array_distinct(token_windows(toks, n))
 
 
 def hash60(s: Column) -> Column:

@@ -21,6 +21,7 @@ from ..functions.text import (
     MINHASH_PRIME,
     hash60,
     minhash_value,
+    token_windows,
     tokens,
     word_shingles,
 )
@@ -849,15 +850,7 @@ def chunk_index(
     one row per consecutive ``chunk_tokens``-token chunk of each doc —
     ``(doc_id, <carried cols>, idx, h)`` with ``h`` the 60-bit content
     hash. Pure Catalyst array ops, zero shuffles."""
-    toks = tokens(F.col(text_col))
-    n_chunks = F.ceil(F.size(toks) / F.lit(chunk_tokens))
-    chunks = F.when(
-        F.size(toks) > 0,
-        F.transform(
-            F.sequence(F.lit(0), n_chunks - 1),
-            lambda i: F.concat_ws(" ", F.slice(toks, i * chunk_tokens + 1, chunk_tokens)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    chunks = token_windows(tokens(F.col(text_col)), chunk_tokens, chunk_tokens)
     return (
         docs.select(
             F.col(id_col).alias("doc_id"),
@@ -899,22 +892,25 @@ def substring_window_index(
     ``chunk_dedup_stream``.
     """
     docs = _spread(docs)
-    toks = tokens(F.col(text_col))
-    n_win = F.greatest(F.size(toks) - F.lit(k - 1), F.lit(0))
-    wins = F.when(
-        n_win > 0,
-        F.transform(
-            F.sequence(F.lit(0), n_win - 1),
-            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, k)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    carried = [c for c in docs.columns if c not in (id_col, text_col)]
+    # Tokenize once: n_tokens comes from the window count (a row has at
+    # least one window, so size = n_win + k − 1), and the generator is
+    # OUTER + null filter because a plain posexplode of the staged
+    # column infers a size(wins) > 0 filter that Catalyst pushes below
+    # this projection, re-running the kernel (doc_shingles' trap)
+    wins = docs.select(
+        F.col(id_col).alias("doc_id"),
+        *carried,
+        token_windows(tokens(F.col(text_col)), k).alias("wins"),
+    )
     return (
-        docs.select(
-            F.col(id_col).alias("doc_id"),
-            *[c for c in docs.columns if c not in (id_col, text_col)],
-            F.size(toks).alias("n_tokens"),
-            F.posexplode(wins).alias("pos", "win"),
+        wins.select(
+            "doc_id",
+            *carried,
+            (F.size("wins") + (k - 1)).alias("n_tokens"),
+            F.posexplode_outer("wins").alias("pos", "win"),
         )
+        .filter(F.col("pos").isNotNull())
         .select("*", hash60(F.col("win")).alias("h"))
         .drop("win")
     )

@@ -16,11 +16,21 @@ compose; this module is the API a pipeline author actually writes:
     )
 
 Every stage is a THIN wrapper over the proven operators/gates and
-returns a new immutable pipeline around a transformed DataFrame — so
-the whole chain stays ONE lazy Catalyst DAG (narrow gates fuse into
+returns a new immutable pipeline around a transformed DataFrame.
+Most stages only extend one lazy Catalyst DAG (narrow gates fuse into
 the scan; only the operators' documented wide steps shuffle), exactly
-like the hand-written q83. Nothing executes until the caller acts on
-``.df``. ``lineage`` records the applied stages for audit output.
+like the hand-written q83. Two batch-only stages run jobs while they
+are built:
+
+- ``dedup_near`` materializes its input once with
+  ``localCheckpoint`` (not fault-tolerant; see its docstring), then
+  runs the MinHash index, LSH buckets and connected-component rounds;
+  the chain after it starts from the checkpointed blocks.
+- ``sample_mixture`` collects the per-group counts behind
+  ``operators.sampling.mixture_rates``.
+
+Every other stage executes nothing until the caller acts on ``.df``.
+``lineage`` records the applied stages for audit output.
 """
 
 from __future__ import annotations
@@ -268,6 +278,13 @@ class CorpusPipeline:
         running q16 then q29 by hand on the same corpus
         (tests/test_pipeline_api.py). Batch-only — streams pair
         ``streaming.lsh_stream`` with ``streaming.components_stream``.
+
+        The input is materialized ONCE with ``localCheckpoint``: the
+        pair search and the final anti-join both read those blocks, and
+        the returned frame's plan starts from them, so the upstream
+        stages never re-run. Local checkpoints live on the executors
+        and are not fault-tolerant — a lost executor fails later
+        actions instead of recomputing the prefix.
         """
         from .operators.components import connected_components
         from .operators.dedup import (
@@ -281,8 +298,12 @@ class CorpusPipeline:
                 "dedup_near is batch-only — use streaming.lsh_stream + "
                 "streaming.components_stream incrementally"
             )
+        # the stage runs jobs while it is built (index, LSH buckets, CC
+        # rounds); materialize its input once so neither those nor the
+        # anti-join below nor any later action re-runs the prefix
+        docs = self._df.localCheckpoint(eager=True)
         pairs = minhash_lsh_pairs(
-            self._df,
+            docs,
             threshold=threshold,
             text_col=self.text_col,
             id_col=self.id_col,
@@ -294,7 +315,7 @@ class CorpusPipeline:
             clusters.filter(F.col("node") != F.col("component"))
             .select(F.col("node").alias(self.id_col))
         )
-        out = self._df.join(drop, self.id_col, "left_anti")
+        out = docs.join(drop, self.id_col, "left_anti")
         return self._next(out, "dedup_near")
 
     # -------------------------------------------------------- sampling

@@ -10,7 +10,12 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from flink_assignment_spark.functions.scalar import file_extension, repo_from_url
-from flink_assignment_spark.functions.text import tokens, word_shingles
+from flink_assignment_spark.functions.text import (
+    canonical_text,
+    token_windows,
+    tokens,
+    word_shingles,
+)
 
 
 def _vals(spark, fn, inputs):
@@ -100,6 +105,99 @@ def test_tokens_and_shingles_edges(spark):
     assert out[0].sh == ["a b c", "b c d"]
     assert out[1].sh == []  # shorter than n → no shingles
     assert out[2].sh == []
+
+
+def _py_shingles(text, n):
+    """Pure-Python reference: whitespace tokens, every full n-token
+    window space-joined, distinct in first-occurrence order."""
+    toks = text.split() if text is not None else []
+    return list(dict.fromkeys(" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)))
+
+
+_SHINGLE_NS = (1, 2, 3, 5, 16)
+_TOKEN = st.sampled_from(["a", "b", "the", "xy", "Q9", "é"])
+_SEP = st.sampled_from([" ", "  ", "\t", " \t ", "\n"])
+_TEXT = st.builds(
+    lambda pre, toks, seps, post: pre + "".join(t + s for t, s in zip(toks, seps)) + post,
+    _SEP | st.just(""),
+    st.lists(_TOKEN, max_size=24),
+    st.lists(_SEP, min_size=24, max_size=24),
+    _SEP | st.just(""),
+)
+
+
+def _check_shingles(spark, texts):
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i int, s string")
+    rows = df.select(
+        "i", *[word_shingles(tokens(F.col("s")), n).alias(f"n{n}") for n in _SHINGLE_NS]
+    ).orderBy("i").collect()
+    for r in rows:
+        for n in _SHINGLE_NS:
+            # whole-array equality: order is checked, not just the set
+            assert r[f"n{n}"] == _py_shingles(texts[r.i], n), (texts[r.i], n)
+
+
+def test_word_shingles_match_python_reference(spark):
+    _check_shingles(
+        spark,
+        [
+            None,
+            "",
+            "   ",
+            " \t\t ",
+            "one two",  # shorter than every n > 2
+            "a b c d",
+            "a a a a a a",  # repeated tokens: one distinct shingle per n
+            "a b a b a b a b",
+            "\t lead and trail \t ",
+            "x " * 40,
+            " ".join(f"w{i}" for i in range(16)),  # exactly n = 16 tokens
+            " ".join(f"w{i % 7}" for i in range(50)),
+        ],
+    )
+
+
+@settings(max_examples=5, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+@given(texts=st.lists(_TEXT, min_size=1, max_size=30))
+def test_word_shingles_property_parity(spark, texts):
+    _check_shingles(spark, texts)
+
+
+def test_shingling_tokenizes_once(spark):
+    """Regression guard for the linear kernel: the tokenizer (and the
+    canonical_text cleaning feeding it) appears exactly once in the
+    shingle expression. A per-position lambda naming the token
+    expression would repeat it — and Catalyst would re-run it at every
+    position."""
+    from flink_assignment_spark.operators.gates import shingle_hash_array
+
+    tree = shingle_hash_array(canonical_text(F.col("t")))._jc.toString()
+    assert tree.count("split(") == 1
+    assert tree.count("regexp_replace(") == 2
+
+
+def test_window_kernel_canonical_form_references_only_its_input(spark):
+    """The kernel's nested lambdas capture no outer lambda variable.
+    Catalyst canonicalizes a captured variable into a dangling
+    reference, and ExtractPythonUDFs filters candidate UDFs on their
+    canonical references: a Python UDF over such a kernel (the bloom
+    and streaming decontamination gates) then stays in the plan and
+    fails at run time whenever no input attribute has expression id
+    0. So the canonical form must reference the text column only."""
+    from flink_assignment_spark.operators.gates import shingle_hash_array
+
+    # aliased, so t's expression id is never 0 — the id a leaked
+    # lambda variable canonicalizes to
+    df = spark.createDataFrame([("a b c d e",)], "s string").select(F.col("s").alias("t"))
+    toks = tokens(F.col("t"))
+    for col in (
+        shingle_hash_array(canonical_text(F.col("t"))),
+        token_windows(toks, 4, 4),
+        token_windows(toks, 3, 2),
+    ):
+        analyzed = df.select(col.alias("out"))._jdf.queryExecution().analyzed()
+        expr = analyzed.projectList().apply(0).child()
+        assert expr.canonicalized().references().size() == 1, expr.toString()
 
 
 # --------------------------- vec_repr: driver-safe vector encoding

@@ -484,6 +484,50 @@ def test_substring_windows_catch_chunk_boundary_spanning_dup(spark):
     occ.unpersist()
 
 
+def test_window_indexes_tokenize_once_and_match_python(spark):
+    """chunk_index and substring_window_index share the let-bound
+    window kernel: each optimized plan tokenizes exactly once (a
+    per-position reference to the token expression, or an inferred
+    size(...) > 0 filter pushed under the projection, would repeat
+    it), and the rows equal a pure-Python windowing of each doc —
+    including short, empty, whitespace-only and null texts."""
+    import hashlib
+
+    from flink_assignment_spark.operators.dedup import chunk_index, substring_window_index
+
+    def h60(s):
+        return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
+
+    texts = {
+        1: " ".join(f"t{i % 5}" for i in range(11)),
+        2: "\t one two three \t",
+        3: "",
+        4: "   ",
+        5: None,
+        6: "a b c d",
+    }
+    docs = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
+    k = 4
+    chunks = chunk_index(docs, k)
+    windows = substring_window_index(docs, k)
+    for idx in (chunks, windows):
+        plan = idx._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count("split(") == 1, plan
+
+    want_chunks, want_windows = [], []
+    for d, t in texts.items():
+        toks = t.split() if t is not None else []
+        for j in range(0, len(toks), k):
+            want_chunks.append((d, j // k, h60(" ".join(toks[j : j + k]))))
+        for j in range(len(toks) - k + 1):
+            want_windows.append((d, len(toks), j, h60(" ".join(toks[j : j + k]))))
+    assert sorted((r.doc_id, r.idx, r.h) for r in chunks.collect()) == sorted(want_chunks)
+    assert sorted(
+        (r.doc_id, r.n_tokens, r.pos, r.h) for r in windows.collect()
+    ) == sorted(want_windows)
+    assert windows.columns == ["doc_id", "n_tokens", "pos", "h"]
+
+
 def test_substring_scrub_removes_exactly_the_copied_span(spark):
     """Apply step: the boundary-spanning copy from the detection test
     is cut from the LATER doc only, and the reconstruction equals the

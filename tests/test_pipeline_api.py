@@ -195,6 +195,23 @@ def test_dedup_near_and_budget_match_operator_level(spark):
     assert out_sizes == {g: min(k, n) for g, n in sizes.items()}
 
 
+def test_dedup_near_materializes_its_input_once(spark):
+    """.dedup_near() checkpoints its input: the optimized plan of the
+    result reads checkpointed blocks, so no tokenizing or cleaning
+    (split / regexp_replace) of the prefix re-runs downstream. (That
+    the kept ids equal q16's pairs contracted by q29 is pinned by
+    test_dedup_near_and_budget_match_operator_level.)"""
+    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text", "lang")
+    prefix = CorpusPipeline(docs).normalize().gate_repetition().dedup_exact()
+    near = prefix.dedup_near(0.3)
+    plan = near.df._jdf.queryExecution().optimizedPlan().toString()
+    assert "split(" not in plan and "regexp_replace(" not in plan, plan
+
+    kept = {r["doc_id"] for r in near.df.collect()}
+    before = {r["doc_id"] for r in prefix.df.collect()}
+    assert kept and kept < before  # the corpus has near-dups to drop
+
+
 def test_full_lifecycle_chain_composes(spark):
     """All stages in one chain stay a single lazy DAG and produce a
     sane audit frame."""
